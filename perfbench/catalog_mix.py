@@ -18,8 +18,7 @@ import json
 import os
 import time
 
-from perfbench.etl_batch import layer_probes
-from perfbench.harness import ROOT, geomean, median, noop
+from perfbench.harness import ROOT, for_seconds, geomean, measured_loop, median, noop
 from perfbench.tables_gen import write_tables
 
 SPEC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "catalog_mix.json")
@@ -152,17 +151,9 @@ def run(ctx) -> dict:
 
     log_start = ctx.log.offset()
     since = time.time()
-    # ``measured`` passes carry the spans; in the traced run the passes in
-    # ``untraced`` run with tracing off, for the overhead ratio
-    measured, untraced = [], []
-    t_end = time.perf_counter() + ctx.seconds
-    min_warm = 4 if tr.enabled else 1
-    while len(measured) + len(untraced) < min_warm or time.perf_counter() < t_end:
-        tr.set_abba(len(measured) + len(untraced))
-        (measured if tr.active or not tr.enabled else untraced).append(
-            _pass(ctx, entries, data, phases=tr.active)
-        )
-    tr.active = tr.enabled
+    measured, untraced = measured_loop(
+        tr, lambda: _pass(ctx, entries, data, phases=tr.active), for_seconds(tr, ctx.seconds)
+    )
     log_end = ctx.log.offset()
     t3 = time.perf_counter()
     walls = [median([p["recs"][i]["wall"] for p in measured]) for i in range(len(entries))]
@@ -213,7 +204,6 @@ def run(ctx) -> dict:
             "trace.overhead_ratio": median([p["sum"] for p in measured])
             / median([p["sum"] for p in untraced]),
             "trace.self_time_coverage": _coverage(tr, since),
-            **layer_probes(ctx, os.path.join(FIXTURES, "*.json"), None),
         }
     return res
 

@@ -24,7 +24,7 @@ import time
 from pyspark.sql import functions as F
 
 from perfbench import captures
-from perfbench.harness import PROC_TIME, ROOT, dir_bytes, median, noop
+from perfbench.harness import PROC_TIME, ROOT, dir_bytes, for_seconds, measured_loop, median, noop
 
 JSON_FILES, JSON_PACKETS = 4, 4000
 PCAP_FILES, PCAP_PACKETS = 4, 2000
@@ -236,15 +236,9 @@ def run(ctx) -> dict:
     settle = _pass(ctx, dirs)
     log_start = ctx.log.offset()
     measured_since = time.time()
-    # ``measured`` passes carry the spans; in the traced run the passes in
-    # ``untraced`` run with tracing off, for the overhead ratio
-    measured, untraced = [], []
-    t_end = time.perf_counter() + ctx.seconds - settle["wall"]
-    min_warm = 4 if tr.enabled else 1
-    while len(measured) + len(untraced) < min_warm or time.perf_counter() < t_end:
-        tr.set_abba(len(measured) + len(untraced))
-        (measured if tr.active or not tr.enabled else untraced).append(_pass(ctx, dirs))
-    tr.active = tr.enabled
+    measured, untraced = measured_loop(
+        tr, lambda: _pass(ctx, dirs), for_seconds(tr, ctx.seconds - settle["wall"])
+    )
     log_end = ctx.log.offset()
 
     failures: list[str] = []

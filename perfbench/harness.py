@@ -251,11 +251,6 @@ class Tracer:
         traced.__wrapped__ = fn
         setattr(module, attr, traced)
 
-    def set_abba(self, i: int) -> None:
-        """Traced run: unit ``i`` of a measured loop runs traced or untraced
-        in the order U T T U, so warm-up drift cancels in the overhead ratio."""
-        self.active = self.enabled and i % 4 in (1, 2)
-
     def named(self, name: str, since: float = 0.0) -> list[dict]:
         return [s for s in self.spans if s["name"] == name and s["start"] >= since]
 
@@ -272,6 +267,32 @@ class Tracer:
         with open(path, "w") as fh:
             for s in self.spans:
                 fh.write(json.dumps(s) + "\n")
+
+
+def for_seconds(tracer: Tracer, seconds: float):
+    """Loop condition for :func:`measured_loop`: run for ``seconds``, and at
+    least once (four times in the traced run, one U T T U round)."""
+    t_end = time.perf_counter() + seconds
+    least = 4 if tracer.enabled else 1
+    return lambda n: n < least or time.perf_counter() < t_end
+
+
+def measured_loop(tracer: Tracer, unit, more) -> tuple[list, list]:
+    """Runs ``unit()`` while ``more(n)`` holds, ``n`` being the units run so
+    far.  Returns ``(measured, untraced)``: in an untraced run every unit is
+    measured; in the traced run units run untraced and traced in the order
+    U T T U, so warm-up drift cancels in the overhead ratio, and only the
+    traced ones (which carry the spans) are in ``measured``."""
+    measured, untraced = [], []
+    while more(len(measured) + len(untraced)):
+        i = len(measured) + len(untraced)
+        tracer.active = tracer.enabled and i % 4 in (1, 2)
+        try:
+            out = unit()
+        finally:
+            traced, tracer.active = tracer.active, tracer.enabled
+        (measured if traced or not tracer.enabled else untraced).append(out)
+    return measured, untraced
 
 
 class JvmLog:

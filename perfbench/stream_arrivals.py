@@ -2,6 +2,11 @@
 
 - Cold call: one file is dropped in and ``run_udm_stream`` runs once on a
   fresh session.
+- Burst phase: ``BURST_FILES`` rotation-sized files (and one corrupt-root
+  file) land at once, like the backlog a restarted service finds after an
+  outage, and one call drains them.  The drain also settles the JIT before
+  the steady phase: without it, call walls fall by a quarter over the first
+  steady calls.
 - Steady phase, open loop: a generator thread renames one completed
   capture into the watched directory every ``INTERVAL_S`` seconds, on a
   schedule that does not wait for the system, for the run's seconds.  The
@@ -9,8 +14,6 @@
   whenever an uncommitted file is present.  A file's latency runs from
   its scheduled arrival to the return of the call that committed it; the
   checkpoint's file-source log says which call that was.
-- Burst phase: ``BURST_FILES`` rotation-sized files (and one corrupt-root
-  file) land at once, like a backlog after an outage, and are drained.
 
 The output table is then checked against the corpus ledger: every file's
 rows present once, no duplicates, and per-file metric rows that add up.
@@ -26,14 +29,15 @@ import time
 
 from perfbench import captures
 from perfbench.etl_batch import layer_probes
-from perfbench.harness import PROC_TIME, median, percentile
+from perfbench.harness import PROC_TIME, measured_loop, median, percentile
 
-INTERVAL_S = 0.2
-STEADY_PACKETS = 500
-BURST_FILES, BURST_PACKETS = 31, 1500
-# the steady phase needs under 16 files per call; 32 lets the whole burst
-# (31 files + the corrupt-root file) drain in one micro-batch
-MAX_FILES_PER_TRIGGER = 32
+# One rotated capture every 0.5 s.  With 2,000-packet files a call takes
+# ~2 s for four files on a 4-core host, the default trigger size's limit,
+# and the backlog grows once the host slows; at 500 packets a call takes
+# ~1.2 s for two or three files, and the fixed per-trigger cost sets latency.
+INTERVAL_S = 0.5
+FILE_PACKETS = 500
+BURST_FILES = 31
 
 
 class Arrivals(threading.Thread):
@@ -99,8 +103,8 @@ def run(ctx) -> dict:
     ckpt = os.path.join(ctx.work, "checkpoint")
     os.makedirs(watch)
     n_steady = math.ceil(ctx.seconds / INTERVAL_S)
-    ledger = captures.json_corpus(staging, ctx.seed, n_steady + 1, STEADY_PACKETS, "steady", False)
-    burst = captures.json_corpus(staging, ctx.seed, BURST_FILES, BURST_PACKETS, "burst")
+    ledger = captures.json_corpus(staging, ctx.seed, n_steady + 1, FILE_PACKETS, "steady", False)
+    burst = captures.json_corpus(staging, ctx.seed, BURST_FILES, FILE_PACKETS, "burst")
     ledger.update(burst)
     steady_names = sorted(n for n in ledger if n.startswith("steady"))
     cold_name, steady_names = steady_names[0], steady_names[1:]
@@ -115,10 +119,7 @@ def run(ctx) -> dict:
     def call() -> dict:
         t = time.perf_counter()
         with tr.span("streaming.run_udm_stream"):
-            udm_pipeline.run_udm_stream(
-                ctx.spark, watch, out, PROC_TIME, checkpoint_dir=ckpt,
-                max_files_per_trigger=MAX_FILES_PER_TRIGGER,
-            )
+            udm_pipeline.run_udm_stream(ctx.spark, watch, out, PROC_TIME, checkpoint_dir=ckpt)
         wall = time.perf_counter() - t
         new = committed.poll()
         return {"wall": wall, "ret": time.monotonic(), "files": new, "batches": len(set(new.values()))}
@@ -126,44 +127,11 @@ def run(ctx) -> dict:
     # cold call
     os.rename(os.path.join(staging, cold_name), os.path.join(watch, cold_name))
     cold = call()
-
-    # steady phase
-    log_start = ctx.log.offset()
-    since = time.time()
-    gen = Arrivals(steady_names, staging, watch, time.monotonic() + INTERVAL_S)
-    steady_start = time.time()
-    gen.start()
-    calls, traced, untraced = [], [], []
-    backlog_end = None
     done = {cold_name}
-    while not set(steady_names) <= done:
-        if gen.error is not None:
-            raise gen.error
-        if backlog_end is None and not gen.is_alive():
-            backlog_end = gen.arrived - (len(done) - 1)
-        if gen.arrived <= len(done) - 1:
-            time.sleep(0.005)
-            continue
-        tr.set_abba(len(calls))
-        c = call()
-        (traced if tr.active else untraced).append(c["wall"])
-        calls.append(c)
-        done.update(c["files"])
-        if time.monotonic() > gen.t0 + ctx.seconds + 120:
-            raise RuntimeError("steady phase did not drain")
-    tr.active = tr.enabled
-    gen.join()
-    if backlog_end is None:
-        backlog_end = 0
-    steady_window = (steady_start, time.time())
-    ret_of = {}
-    for c in calls:
-        for name in c["files"]:
-            ret_of[name] = c["ret"]
-    latencies = [ret_of[n] - gen.due[n] for n in steady_names]
 
     # burst phase
-    burst_start = time.time()
+    log_start = ctx.log.offset()
+    since = time.time()
     t0 = time.perf_counter()
     for name in sorted(burst):
         os.rename(os.path.join(staging, name), os.path.join(watch, name))
@@ -174,9 +142,43 @@ def run(ctx) -> dict:
         if burst_calls > 20:
             raise RuntimeError("burst did not drain")
     drain_s = time.perf_counter() - t0
-    burst_window = (burst_start, time.time())
-    log_end = ctx.log.offset()
+    burst_window = (since, time.time())
     burst_pkts = sum(e["packets"] for e in burst.values())
+
+    # steady phase
+    gen = Arrivals(steady_names, staging, watch, time.monotonic() + INTERVAL_S)
+    steady_start = time.time()
+    gen.start()
+    backlog = []  # steady files arrived but not committed when the generator ended
+
+    def steady_call() -> dict:
+        """Waits until an uncommitted steady file is present, then calls."""
+        while True:
+            if gen.error is not None:
+                raise gen.error
+            pending = gen.arrived - len(done.intersection(steady_names))
+            if not backlog and not gen.is_alive():
+                backlog.append(pending)
+            if pending > 0:
+                break
+            if time.monotonic() > gen.t0 + ctx.seconds + 120:
+                raise RuntimeError("steady phase did not drain")
+            time.sleep(0.005)
+        c = call()
+        done.update(c["files"])
+        return c
+
+    traced, untraced = measured_loop(tr, steady_call, lambda n: not set(steady_names) <= done)
+    calls = traced + untraced
+    gen.join()
+    backlog_end = backlog[0] if backlog else 0
+    steady_window = (steady_start, time.time())
+    ret_of = {}
+    for c in calls:
+        for name in c["files"]:
+            ret_of[name] = c["ret"]
+    latencies = [ret_of[n] - gen.due[n] for n in steady_names]
+    log_end = ctx.log.offset()
 
     failures: list[str] = []
     failed = _check(out, ledger, failures)
@@ -200,6 +202,7 @@ def run(ctx) -> dict:
             "steady_calls": len(calls),
             "burst_calls": burst_calls,
             "interval_s": INTERVAL_S,
+            "steady_call_walls_s": [c["wall"] for c in calls],
         },
         "windows": [steady_window, burst_window],
         "log_window": (log_start, log_end),
@@ -215,7 +218,8 @@ def run(ctx) -> dict:
             "stream.backlog_end_files": backlog_end,
             "udm.build_s": median([s["end"] - s["start"] for s in builds]),
             "udm.build_py4j_calls": median([s["py4j_calls"] for s in builds]),
-            "trace.overhead_ratio": median(traced) / median(untraced),
+            "trace.overhead_ratio": median([c["wall"] for c in traced])
+            / median([c["wall"] for c in untraced]),
             # share of the steady phase spent inside run_udm_stream calls
             "trace.self_time_coverage": sum(walls) / (steady_window[1] - steady_window[0]),
         }
