@@ -274,12 +274,13 @@ def u14_pandas_window_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DQ8: in-flight pipeline metrics via observe()
 # ---------------------------------------------------------------------------
 
+# revenue stays the exact DECIMAL(38,8) sum: canon rounds it to double
+# correctly, where DuckDB's DECIMAL -> DOUBLE cast need not be.
 _DQ8_ORACLE = """
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n_items,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE)
-         AS revenue
+       SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+           * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS revenue
 FROM lineitem
 WHERE l_quantity > 5
 GROUP BY l_returnflag

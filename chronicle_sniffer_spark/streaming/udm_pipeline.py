@@ -9,10 +9,12 @@
            per-file metric rows        (R23/R25)
 
 Where the reference needed Pub/Sub push + Cloud Run + per-file
-subprocesses, the streaming runtime supplies the same guarantees
-natively: the file source lists only completed files (R3), the
-checkpoint dedups re-listed files (R4), and foreachBatch appends are
-keyed by source file for overwrite-idempotency (R5/S7).
+subprocesses, the streaming runtime supplies most of the same
+guarantees natively: the file source lists only completed files (R3)
+and the checkpoint dedups re-listed files (R4).  Delivery to the sink
+is at-least-once, not exactly-once: foreachBatch appends, so an epoch
+replayed after a crash between the events append and the checkpoint
+commit writes its rows again.
 """
 
 from __future__ import annotations
@@ -64,8 +66,8 @@ def run_udm_stream(
     metrics_dir = os.path.join(out_dir, "file_metrics")
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        # per-batch transactional pair: events append + metric rows;
-        # both keyed by source file so redelivery overwrites, not dups
+        # per-batch pair: events append + metric rows.  Both are plain
+        # appends, so a replayed epoch duplicates its rows (at-least-once)
         batch.persist()
         try:
             batch.write.mode("append").partitionBy("event_date").parquet(events_dir)

@@ -46,6 +46,22 @@ evaluate only for the rare malformed/error rows.  (The round-1
 version materialized ~25 unconditional schema walks per row; this
 formulation benches ~3× faster on the B1 corpus.)
 
+Codegen layout: the projection is built from codegen-supported
+builtins except for one lambda — "first answer TTL that fails int()"
+needs a ``filter``.  A higher-order function is a ``CodegenFallback``
+expression, so the ``_error_msg`` Project that holds it leaves
+whole-stage codegen; that Project is the planned stage boundary.  The
+scan and :func:`_stage1` fuse into one compiled stage below it, the
+event assembly and the sink into another above it, and the boundary
+itself still runs a compiled ``UnsafeProjection`` in which only the
+lambda subtree is interpreted (and only on rows with a DNS layer).
+The lambda must not move below stage 1: scan, stage 1 and the event
+assembly would then fuse into ONE stage whose generated method exceeds
+Janino's 64 KB limit, and Spark retries that compile and falls back to
+interpreted evaluation on every job, because failed compiles are not
+cached (``tests/test_udm.py`` runs each UDM job shape with the
+fallback disabled).
+
 Documented intent-over-literal deviations from the reference:
 - frame number: the reference's ``get_nested_value(pkt,
   "_source.layers.frame.frame.number")`` can never resolve (tshark
@@ -231,46 +247,6 @@ def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
     ISO-8601 string like ``2025-01-01T00:00:00.000000Z``.
     """
     proc_ts = F.lit(processing_time)
-
-    # ---- ttl-error islet (the ONE interpreted operator) ------------------
-    # Higher-order functions (transform/filter/exists lambdas) are
-    # CodegenFallback expressions: a single one in a Project knocks the
-    # ENTIRE operator out of whole-stage codegen, and the ~400-expression
-    # event assembly then evaluates interpreted (measured ~3x slower on
-    # the B1 corpus).  Every former lambda in the hot path is rewritten
-    # below with codegen-supported builtins; the one irreducible lambda —
-    # "first TTL that fails int()", which needs a filter — is computed
-    # HERE, at the bottom of the DAG on the raw 3-column rows, so the
-    # interpreted operator boundary stays narrow.  The `_ttl_err_msg`
-    # shield column references `_ttl_err_raw` twice, which stops
-    # CollapseProject from inlining the lambda back up into the codegen
-    # projections (it only inlines aliases referenced once or cheap).
-    _DNS_ANS_INLINE = (
-        f"try_cast(try_element_at(try_cast(try_element_at("
-        f"try_cast(try_variant_get(_source, '$.layers') AS {_MAPV}), 'dns') AS {_MAPV}),"
-        f" 'Answers') AS {DNS_ANSWERS_DDL})"
-    )
-    _M_DNS_INLINE = (
-        f"try_cast(try_element_at("
-        f"try_cast(try_variant_get(_source, '$.layers') AS {_MAPV}), 'dns') AS {_MAPV})"
-    )
-    _A_TTLS_INLINE = (
-        f"filter(transform(map_values({_DNS_ANS_INLINE}), x -> x['dns.resp.ttl']),"
-        f" v -> v IS NOT NULL)"
-    )
-    df = df.withColumn(
-        "_ttl_err_raw",
-        F.expr(
-            f"CASE WHEN ({_M_DNS_INLINE}) IS NOT NULL AND size({_M_DNS_INLINE}) > 0"
-            f" AND exists({_A_TTLS_INLINE}, t -> try_cast(t AS int) IS NULL)"
-            f" THEN concat('invalid literal for int() with base 10: ''',"
-            f"   filter({_A_TTLS_INLINE}, t -> try_cast(t AS int) IS NULL)[0], '''')"
-            f" END"
-        ),
-    ).withColumn(
-        "_ttl_err_msg",
-        F.expr("CASE WHEN _ttl_err_raw IS NOT NULL THEN _ttl_err_raw END"),
-    )
 
     stage1 = _stage1(df)
 
@@ -527,6 +503,16 @@ def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
     def int_fail(col_expr: str) -> Column:
         return F.expr(f"({col_expr} IS NOT NULL AND try_cast({col_expr} AS int) IS NULL)")
 
+    # First answer TTL that fails int() (ref :215).  The filter lambda is
+    # the projection's one interpreted expression and places the
+    # whole-stage-codegen boundary at _error_msg (see module docstring).
+    ttl_err = F.when(
+        dns_present,
+        _int_err(
+            "try_element_at(filter(map_values(dns_answers).`dns.resp.ttl`,"
+            " t -> t IS NOT NULL AND try_cast(t AS int) IS NULL), 1)"
+        ),
+    )
     flags_tree_bad = F.expr(
         f"(V_flags_tree IS NOT NULL AND M_flags_tree IS NULL"
         f" AND to_json(V_flags_tree) NOT IN {_FALSY_JSON})"
@@ -566,7 +552,7 @@ def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
             _int_err("L_http.`http.response.code`"),
         )
         .when(B("dns"), _attr_err("schema_of_variant(V_dns)"))
-        .when(F.col("_ttl_err_msg").isNotNull(), F.col("_ttl_err_msg"))
+        .when(ttl_err.isNotNull(), ttl_err)
         .when(dns_present & flags_tree_bad, _attr_err("schema_of_variant(V_flags_tree)"))
         .when(B("tls"), _attr_err("schema_of_variant(V_tls)"))
         .when(P("tls") & hs_bad, _attr_err("schema_of_variant(V_tls_hs)"))

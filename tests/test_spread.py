@@ -24,12 +24,29 @@ def test_spread_repartitions_many_tiny_files(spark):
         spark.range(64).repartition(64).write.parquet(d)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    df = spark.read.parquet(d)
-    par = spark.sparkContext.defaultParallelism
-    assert len(df.inputFiles()) >= min(par, 64)
-    # raw scan bin-packs the tiny files into far fewer partitions
-    assert df.rdd.getNumPartitions() < par
-    assert spread(df).rdd.getNumPartitions() >= par
+    # Force the split planner to bin-pack every tiny file into one scan
+    # task on any core count: minPartitionNum=1 stops it from sizing
+    # splits to total/cores, and one split may hold the whole directory.
+    packing = {
+        "spark.sql.files.maxPartitionBytes": "1g",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in packing}
+    for k, v in packing.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.read.parquet(d)
+        par = spark.sparkContext.defaultParallelism
+        assert len(df.inputFiles()) >= min(par, 64)
+        # raw scan bin-packs the tiny files into far fewer partitions
+        assert df.rdd.getNumPartitions() < par
+        assert spread(df).rdd.getNumPartitions() >= par
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_spread_is_noop_on_already_parallel_relation(spark):

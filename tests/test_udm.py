@@ -129,3 +129,41 @@ def test_corrupt_file_quarantined_not_dropped(spark):
     assert len(rows) == 1
     assert rows[0].is_error
     assert rows[0].event_type == "NETWORK_EVENT_ERROR"
+
+
+def test_udm_jobs_compile_without_codegen_fallback(spark):
+    """Every UDM job shape compiles: with codegen fallback off, a
+    generated class Janino rejects (e.g. one fused stage over 64 KB)
+    raises instead of silently running interpreted on every job."""
+    import tempfile
+
+    from chronicle_sniffer_spark.etl import convert_directory, per_file_metrics
+    from chronicle_sniffer_spark.sources.pcap import read_pcap
+    from chronicle_sniffer_spark.sources.pcap_synth import (
+        example_packets,
+        pcap_bytes,
+        pcapng_bytes,
+    )
+    from chronicle_sniffer_spark.streaming.udm_pipeline import run_udm_stream
+
+    base = tempfile.mkdtemp(prefix="css_udm_codegen_")
+    cap_dir = os.path.join(base, "captures")
+    os.makedirs(cap_dir)
+    with open(os.path.join(cap_dir, "capture.pcap"), "wb") as f:
+        f.write(pcap_bytes(example_packets()))
+    with open(os.path.join(cap_dir, "capture.pcapng"), "wb") as f:
+        f.write(pcapng_bytes(example_packets()))
+
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        batch = convert_directory(spark, FIXDIR, PROC_TIME)
+        batch.write.format("noop").mode("overwrite").save()
+        batch.drop("udm_json").write.format("noop").mode("overwrite").save()
+        pcap = project_udm(read_pcap(spark, cap_dir), PROC_TIME)
+        pcap.write.format("noop").mode("overwrite").save()
+        assert per_file_metrics(batch).count() == len(os.listdir(FIXDIR))
+        assert per_file_metrics(pcap).count() == 2
+        run_udm_stream(spark, FIXDIR, os.path.join(base, "out"), PROC_TIME)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)

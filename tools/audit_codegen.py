@@ -2,10 +2,13 @@
 
 Any higher-order-function lambda (transform/filter/exists/aggregate/
 zip_with) is a CodegenFallback expression; ONE of them in a Project/
-Generate/Filter knocks that whole operator out of whole-stage codegen
-and its full expression tree evaluates interpreted — the round-4 UDM
-projection measured ~3x slower, and the all-pairs cosine 68x, from
-exactly this.  Run per-round after adding operators:
+Generate/Filter knocks that whole operator out of whole-stage codegen.
+The operator still compiles its expressions (ProjectExec builds a
+split-method UnsafeProjection) and only the lambda subtree evaluates
+interpreted, but the fused stage is cut in two at that operator, and a
+lambda applied per row over wide arrays stays interpreted — the
+all-pairs cosine measured 68x slower from exactly this.  Run per-round
+after adding operators:
 
     python tools/audit_codegen.py [sf_dir]
 
@@ -36,8 +39,10 @@ ACCEPTED = {
     "p9b_higher_order",  # the higher-order-function capability itself
     "p10b_map_transforms",  # same, for maps
     "s4_pcap_ingest",  # Python struct decoder by design
-    "udm_per_file_metrics",  # UDM ttl-error islet (narrow, by design)
-    "udm_projection",  # UDM ttl-error islet (narrow, by design)
+    # first-bad-TTL filter: the planned codegen boundary between the
+    # scan+stage-1 stage and the event-assembly stage; DNS rows only
+    "udm_per_file_metrics",
+    "udm_projection",
     "l2_simhash_clusters",  # label-propagation loop reuses accepted parts
     "s10_python_datasource",  # Python data source by design
     "l2_semantic_dedup",  # ivf._assign centroid fold (16 broadcast cells)
