@@ -2,9 +2,11 @@
 
 Why this exists (guide §1.2 step 1 applied to the DRIVER): plan
 construction is serial, driver-side work a cluster cannot
-parallelize, and for this catalog it is a large fixed cost per query
-(bench.py's ``plan_build`` split measured ~78 s of the ~206 s
-headline at round-14 close).  Round 14 removed the per-call
+parallelize, and it is a fixed cost on every job and micro-batch.
+Measured on traced ``perfbench`` ``stream_arrivals`` runs (seed 1,
+two runs per side, 4-core host): the UDM projection build takes
+0.103-0.105 s and 1186 py4j round trips with this cache, 0.135-0.159 s
+and 2455-2468 round trips with ``CSS_NO_PY4J_FASTPATH=1``.  Round 14 removed the per-call
 DataFrame-debugging origin capture (~half of all py4j round trips);
 the residual round trips are dominated by py4j REFLECTION commands
 that py4j 0.10.9.x re-issues on every access:
@@ -41,10 +43,14 @@ Safety argument:
 - Failures are never cached: an unknown name raises exactly as
   before, every time.
 - ``java_import()`` after a cached resolution of the same short name
-  could in principle change what that name resolves to.  PySpark
-  performs all of its ``java_import()`` calls once at gateway launch,
-  before any lookup this engine performs, and this engine never calls
-  ``java_import``.
+  changes what that name resolves to (an unknown short name resolves
+  to a ``JavaPackage`` until the import makes it a ``JavaClass``).
+  PySpark calls ``java_import`` lazily, not only at gateway launch:
+  ``DataStreamWriter.foreachBatch`` and
+  ``StreamingQueryManager.addListener`` import on first use.  So
+  :func:`install` also wraps ``py4j.java_gateway.java_import`` to
+  drop the target view's cache after the import; those PySpark call
+  sites look the function up from that module at call time.
 
 Results are byte-identical (the same JVM methods execute with the
 same arguments); only redundant reflection chatter is removed.
@@ -65,6 +71,7 @@ def install() -> None:
     if _INSTALLED or os.environ.get("CSS_NO_PY4J_FASTPATH"):
         return
 
+    from py4j import java_gateway
     from py4j.java_gateway import JavaClass, JavaMember, JavaPackage, JVMView
 
     view_orig = JVMView.__getattr__
@@ -118,9 +125,19 @@ def install() -> None:
             cache[name] = value
         return value
 
+    import_orig = java_gateway.java_import
+
+    def java_import(jvm_view: JVMView, import_str: str):
+        # the import can turn a cached JavaPackage short name into a
+        # class: re-resolve everything on this view from now on
+        result = import_orig(jvm_view, import_str)
+        jvm_view.__dict__.pop("_css_attr_cache", None)
+        return result
+
     JVMView.__getattr__ = view_getattr  # type: ignore[method-assign]
     JavaClass.__getattr__ = class_getattr  # type: ignore[method-assign]
     JavaPackage.__getattr__ = package_getattr  # type: ignore[method-assign]
+    java_gateway.java_import = java_import
     _INSTALLED = True
 
     # NOT patched, deliberately: the per-dropped-JavaObject MEMORY_DEL

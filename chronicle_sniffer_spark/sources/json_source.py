@@ -23,15 +23,18 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.schemas import RAW_PACKET_SCHEMA
 
 
-def read_tshark_json(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
-    """Read tshark ``-T json`` output into one row per packet.
+def tshark_json(reader, path: str) -> DataFrame:
+    """The one definition of the tshark-JSON read, for a batch
+    ``DataFrameReader`` or a streaming ``DataStreamReader``: one row
+    per root-array element, unparseable elements quarantined in
+    ``_corrupt_record``.
 
     Returns columns: ``_source`` (VARIANT), ``_corrupt_record``,
     ``source_file``.
     """
     df = (
-        spark.read.schema(RAW_PACKET_SCHEMA)
-        .option("multiLine", multiline)
+        reader.schema(RAW_PACKET_SCHEMA)
+        .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
@@ -41,3 +44,9 @@ def read_tshark_json(spark: SparkSession, path: str, multiline: bool = True) -> 
         "_corrupt_record",
         F.input_file_name().alias("source_file"),
     )
+
+
+def read_tshark_json(spark: SparkSession, path: str) -> DataFrame:
+    """Read tshark ``-T json`` output into one row per packet (see
+    :func:`tshark_json`)."""
+    return tshark_json(spark.read, path)

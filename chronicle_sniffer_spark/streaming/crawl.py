@@ -16,7 +16,8 @@ Shape:
   decode (sources/warc.py decode_members), HTML extraction, C4
   quality gate — nothing is reimplemented stream-side;
 - the sink is a manifest-committed bucket store (streaming/
-  manifest.py), bucketed by CONTAINER FILE: each batch MERGEs its
+  manifest.py describes the storage, commit and exactly-once
+  protocol), bucketed by CONTAINER FILE: each batch MERGEs its
   files' documents into only the buckets those files hash into
   (existing rows for OTHER files are carried forward; rows for the
   batch's own files are REPLACED).  A bucket's content is therefore a
@@ -24,9 +25,7 @@ Shape:
   S7 idempotence contract holds structurally: re-delivering a
   container (duplicate notification, checkpoint loss, operator
   replay) rewrites its bucket with byte-identical rows instead of
-  appending duplicates, and publication stays one atomic manifest
-  flip per batch (a crash mid-batch leaves readers on the previous
-  consistent snapshot).
+  appending duplicates.
 
 At 100 TB: the data path is fully distributed (decode/extract/gate
 run on executors; the MERGE is a bucket-pruned anti-join + union);
@@ -46,7 +45,6 @@ BINARYFILE_SCHEMA = (
     "path string, modificationTime timestamp, length bigint, content binary"
 )
 CRAWL_TABLE_SCHEMA = "doc_id bigint, file string, n_tokens bigint, text string"
-N_BUCKETS = 32
 
 
 def gated_extract(recs: DataFrame) -> DataFrame:
@@ -109,20 +107,12 @@ def gated_extract(recs: DataFrame) -> DataFrame:
     ).select("doc_id", "file", "n_tokens", "text")
 
 
-def _bucket_of(col: str = "file"):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
-
-
 def read_crawl_table(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """One consistent manifest snapshot of the ingested document
     table (time travel via ``version``)."""
-    m = mf.read_manifest(table_dir, version)
-    paths = mf.bucket_paths(table_dir, m)
-    if not paths:
-        return spark.createDataFrame([], CRAWL_TABLE_SCHEMA)
-    return spark.read.schema(CRAWL_TABLE_SCHEMA).parquet(*paths)
+    return mf.read_snapshot(spark, table_dir, CRAWL_TABLE_SCHEMA, version)
 
 
 def merge_containers(
@@ -149,44 +139,30 @@ def merge_containers(
         for r in spark.createDataFrame(
             [(p,) for p in batch_files], "file string"
         )
-        .select(_bucket_of("file").alias("bucket"))
+        .select(mf.bucket_of("file").alias("bucket"))
         .distinct()
         .collect()
     }
     docs = gated_extract(decode_members(files)).withColumn(
-        "bucket", _bucket_of("file")
+        "bucket", mf.bucket_of("file")
     )
     m = mf.read_manifest(table_dir)
     epoch = (m["epoch"] + 1) if m else 0
-    old_paths = mf.bucket_paths(table_dir, m, touched)
-    if old_paths:
-        carried = (
-            spark.read.schema(CRAWL_TABLE_SCHEMA)
-            .parquet(*old_paths)
-            # REPLACE the batch's own files' rows: re-delivery must
-            # rewrite, not append (the S7 contract).  The IN list is
-            # bounded by maxFilesPerTrigger; an unbounded batch would
-            # want a broadcast anti-join instead.
-            .filter(~F.col("file").isin(batch_files))
-            .withColumn("bucket", _bucket_of("file"))
+    carried = (
+        mf.read_snapshot(
+            spark, table_dir, CRAWL_TABLE_SCHEMA, buckets=touched, manifest=m
         )
-        merged = carried.unionByName(docs)
-    else:
-        merged = docs
-    staging = mf.staging_dir(table_dir, epoch)
-    merged.write.partitionBy("bucket").parquet(staging)
-    import os
-
-    written = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staging)
-        if d.startswith("bucket=")
+        # REPLACE the batch's own files' rows: re-delivery must
+        # rewrite, not append (the S7 contract).  The IN list is
+        # bounded by maxFilesPerTrigger; an unbounded batch would
+        # want a broadcast anti-join instead.
+        .filter(~F.col("file").isin(batch_files))
+        .withColumn("bucket", mf.bucket_of("file"))
     )
-    # a touched bucket the merge drained to zero rows writes no
-    # bucket=NN dir; it must leave the manifest in the SAME flip or
-    # its stale path would keep serving the replaced rows
-    drained = sorted(b for b in touched if b not in set(written))
-    mf.commit(table_dir, epoch, written, dropped_buckets=drained)
+    # a touched bucket the merge drained to zero rows leaves the
+    # manifest in the same flip, or its stale path would keep serving
+    # the replaced rows
+    mf.publish(table_dir, epoch, carried.unionByName(docs), touched=touched)
     return epoch
 
 

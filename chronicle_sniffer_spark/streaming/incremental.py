@@ -12,25 +12,14 @@ MERGE entry (plans/quality.py s8_merge_upsert), generalizing the
 reference's per-file counter accumulation (R23/R26) to a keyed,
 restart-safe table.
 
-Storage & merge shape (the 100 TB design; the data path is fully
-distributed): the table is hash-bucketed on user_id; each micro-batch
-full-outer-merges its partials into ONLY the buckets its keys hash
-into, stages them as WRITE-ONCE files under ``data/commit=E/
-bucket=NN``, and publishes with ONE atomic manifest flip
-(streaming/manifest.py) — no delete+rename window anywhere, so a
-crash at any point leaves readers on the previous manifest seeing a
-consistent cross-bucket snapshot.  Untouched buckets' files are never
-rewritten, so per-batch write cost tracks the batch's key spread, not
-the table size.
-
-Exactly-once: the manifest records each bucket's applied epoch and
-commits atomically with the bucket paths.  On redelivery, buckets
-whose manifest epoch already reached E are skipped; staged-but-never-
-published residue is discarded and merged exactly once.  Values
-accumulate through exact DECIMAL(18,4) so association order across
-micro-batches can never matter.  Driver-side actions are
-control-plane only (affected-bucket ids + the manifest file) — the
-same metadata a Delta/Iceberg commit writes.
+Storage, commit and exactly-once: the table is a manifest-committed
+bucket store on ``user_id`` (streaming/manifest.py describes the
+protocol).  Each micro-batch full-outer-merges its partials into ONLY
+the buckets its keys hash into, so per-batch write cost tracks the
+batch's key spread, not the table size; a redelivered epoch merges
+each bucket exactly once.  Values accumulate through exact
+DECIMAL(18,4) so association order across micro-batches can never
+matter.
 """
 
 from __future__ import annotations
@@ -41,23 +30,14 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.streaming import manifest as mf
 
 TABLE_SCHEMA = "user_id bigint, n_events bigint, total_value decimal(18,4)"
-N_BUCKETS = 32
-
-
-def _bucket_of(col: str = "user_id"):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def _read_table(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Resolve through ONE manifest version (default latest): a frozen,
-    consistent cross-bucket snapshot (time travel via ``version``)."""
-    m = mf.read_manifest(table_dir, version)
-    paths = mf.bucket_paths(table_dir, m)
-    if not paths:
-        return spark.createDataFrame([], TABLE_SCHEMA)
-    return spark.read.schema(TABLE_SCHEMA).parquet(*paths)
+    """One consistent manifest snapshot of the rollup table (time
+    travel via ``version``)."""
+    return mf.read_snapshot(spark, table_dir, TABLE_SCHEMA, version)
 
 
 def merge_batch(
@@ -78,22 +58,17 @@ def merge_batch(
             F.count("*").cast("bigint").alias("d_n"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("d_total"),
         )
-        .withColumn("bucket", _bucket_of())
+        .withColumn("bucket", mf.bucket_of("user_id"))
     )
     m = mf.read_manifest(table_dir)
-    done = [b for b, e in mf.bucket_epochs(m).items() if e >= int(epoch_id)]
-    todo = part.filter(~F.col("bucket").isin(done)) if done else part
-    affected = sorted(r["bucket"] for r in todo.select("bucket").distinct().collect())
+    todo, affected = mf.unapplied(part, m, epoch_id)
     if not affected:
         return  # fully-applied replay (or empty batch): no-op
     # a rewritten bucket carries ALL its keys forward: read the
     # affected buckets by exact manifest path (untouched keys in an
     # affected bucket flow through the full-outer join unchanged)
-    stored_paths = mf.bucket_paths(table_dir, m, set(affected))
-    stored = (
-        spark.read.schema(TABLE_SCHEMA).parquet(*stored_paths)
-        if stored_paths
-        else spark.createDataFrame([], TABLE_SCHEMA)
+    stored = mf.read_snapshot(
+        spark, table_dir, TABLE_SCHEMA, buckets=affected, manifest=m
     )
     merged = stored.join(todo.drop("bucket"), "user_id", "full_outer").select(
         "user_id",
@@ -106,13 +81,16 @@ def merge_batch(
         )
         .cast("decimal(18,4)")
         .alias("total_value"),
-        _bucket_of().alias("bucket"),
+        mf.bucket_of("user_id").alias("bucket"),
     )
-    staging = mf.staging_dir(table_dir, epoch_id)
-    merged.write.partitionBy("bucket").parquet(staging)
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    mf.commit(table_dir, int(epoch_id), affected)
+    # a merge never empties a bucket: touched == the buckets written
+    mf.publish(
+        table_dir,
+        epoch_id,
+        merged,
+        touched=affected,
+        fail_before_commit=fail_before_commit,
+    )
 
 
 def maintain_rollup(events_stream: DataFrame, table_dir: str, checkpoint_dir: str):
@@ -153,23 +131,11 @@ def compact_table(
     m = mf.read_manifest(table_dir)
     if m is None:
         raise ValueError(f"nothing to compact at {table_dir}")
-    cur = _read_table(spark, table_dir)
-    epoch = int(m["epoch"]) + 1
-    staging = mf.staging_dir(table_dir, epoch)
-    (
-        cur.withColumn("bucket", _bucket_of())
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(staging)
+    cur = mf.read_snapshot(spark, table_dir, TABLE_SCHEMA, manifest=m)
+    return mf.publish(
+        table_dir,
+        int(m["epoch"]) + 1,
+        cur.withColumn("bucket", mf.bucket_of("user_id")).repartition("bucket"),
+        touched=mf.bucket_epochs(m).keys(),
+        fail_before_commit=fail_before_commit,
     )
-    import os
-
-    written = sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(staging)
-        if name.startswith("bucket=")
-    )
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    dropped = [b for b in mf.bucket_epochs(m) if b not in set(written)]
-    return mf.commit(table_dir, epoch, written, dropped_buckets=dropped)

@@ -1,26 +1,57 @@
-"""Atomic manifest commits for the stream-maintained bucket stores
-(sessions.py, incremental.py) — closes the commit-granularity window
-the round-10 verdict documented: dynamic-partition overwrite delegates
-bucket-directory replacement to the file committer, so a crash MID-JOB
-could leave some buckets at epoch E and others at E−1 (each bucket
-individually consistent, but a cross-bucket read was not a snapshot).
+"""The bucket-store protocol: write-once bucket files published by one
+atomic manifest flip.  This module is the one description of the
+storage, commit and exactly-once rules shared by the four
+manifest-committed stores; each store keeps only its own merge:
+
+- ``streaming/sessions.py`` — session table, gaps-and-islands merge,
+  bucketed on ``user_id``;
+- ``streaming/incremental.py`` — rollup table, full-outer MERGE (and
+  ``compact_table``), bucketed on ``user_id``;
+- ``streaming/crawl.py`` — crawl document table, replace-by-file,
+  bucketed on the container ``file``;
+- ``operators/ivf.py`` — IVF inverted file, bucket ≡ cell id.
+
+It closes the commit-granularity window the round-10 verdict
+documented: dynamic-partition overwrite delegates bucket-directory
+replacement to the file committer, so a crash MID-JOB could leave
+some buckets at epoch E and others at E−1 (each bucket individually
+consistent, but a cross-bucket read was not a snapshot).
 
 Protocol (the Iceberg/Delta shape, self-contained):
 
-1. **Data files are immutable and write-once.**  A commit for epoch E
-   writes its rewritten buckets under ``data/commit=E/bucket=NN`` —
+1. **Buckets.**  A store hash-partitions its rows into
+   :data:`N_BUCKETS` buckets by :func:`bucket_of` (the IVF index uses
+   its cell id instead).  A commit rewrites only the buckets its
+   batch touches; untouched buckets' files are never read, rewritten
+   or renamed, so per-commit write cost tracks the batch's key spread,
+   not the table size.
+2. **Data files are immutable and write-once.**  :func:`publish`
+   writes a commit for epoch E under ``data/commit=E/bucket=NN`` —
    a NEW directory, never an in-place overwrite, so there is no
    delete+rename window at all.  A crashed attempt leaves an
    unpublished directory that no reader can reach (readers resolve
    paths only through the manifest); the retry removes and rewrites it.
-2. **Publication is ONE atomic rename.**  A manifest version file
+3. **Publication is ONE atomic rename.**  A manifest version file
    ``manifest/v{N}.json`` maps every bucket to the exact data path
    (and epoch) that serves it.  The new version is written to a temp
    file and ``os.replace``d into place — readers either see v{N}
    complete or not at all, so a cross-bucket read through one
-   manifest is always a consistent snapshot: ALL buckets at their
-   v{N} epochs, never mixed between two commits.
-3. **Snapshot isolation / time travel** fall out: a reader that
+   manifest (:func:`read_snapshot`) is always a consistent snapshot:
+   ALL buckets at their v{N} epochs, never mixed between two commits.
+   A touched bucket the merge drained to zero rows writes no
+   ``bucket=NN`` directory; it leaves the map in the SAME flip, so no
+   stale path keeps serving replaced rows.
+4. **Exactly-once per epoch.**  The manifest records each bucket's
+   applied epoch and commits atomically WITH the bucket paths.  On a
+   redelivered epoch E, :func:`unapplied` skips the buckets whose
+   manifest epoch already reached E, and the buckets a crashed
+   attempt staged but never published are merged exactly once.
+   Together with a replayable source (the stream checkpoint) this is
+   the Structured Streaming exactly-once recipe: an idempotent sink
+   per epoch.  The crawl store gets the same result structurally: a
+   bucket's content is a function of the container files mapping to
+   it, so a replay rewrites it with identical rows.
+5. **Snapshot isolation / time travel** fall out: a reader that
    resolved version k keeps a frozen view even while later commits
    land (compose of the s14_snapshot_time_travel idea), and
    :func:`prune` drops data directories unreferenced by the retained
@@ -28,11 +59,13 @@ Protocol (the Iceberg/Delta shape, self-contained):
 
 Scale notes: the manifest is control-plane metadata — O(N_BUCKETS)
 entries, written by the single foreachBatch driver (streaming sinks
-are single-writer by construction).  On a real cluster the atomic
-rename is HDFS ``rename`` or an object-store conditional put; the
-production swap-in is a Delta/Iceberg commit, whose log append is
-exactly this one-file flip.  The DATA path stays fully distributed —
-the manifest never carries rows.
+are single-writer by construction).  The only driver-side reads are
+the affected-bucket id list and the staged ``bucket=`` directory
+names.  On a real cluster the atomic rename is HDFS ``rename`` or an
+object-store conditional put; the production swap-in is a
+Delta/Iceberg commit, whose log append is exactly this one-file flip.
+The DATA path stays fully distributed — the manifest never carries
+rows.
 """
 
 from __future__ import annotations
@@ -41,8 +74,17 @@ import json
 import os
 import shutil
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 MANIFEST_DIR = "manifest"
 DATA_DIR = "data"
+N_BUCKETS = 32
+
+
+def bucket_of(col: str):
+    """Bucket id of ``col``: ``pmod(xxhash64(col), N_BUCKETS)``."""
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -117,6 +159,44 @@ def bucket_paths(table_dir: str, manifest: dict | None, buckets=None) -> list[st
     return out
 
 
+def read_snapshot(
+    spark: SparkSession,
+    table_dir: str,
+    schema: str,
+    version: int | None = None,
+    buckets=None,
+    manifest: dict | None = None,
+) -> DataFrame:
+    """Read the store through ONE manifest (``manifest`` if the caller
+    already resolved one, else ``version``, default latest) — the
+    paths are frozen at resolve time, so the result is a consistent
+    snapshot even if later commits land while it is being consumed.
+    ``buckets`` restricts the read to those bucket ids: path
+    resolution IS the pruning (other buckets' files are never listed).
+    An empty store (or no matching bucket) reads as an empty DataFrame
+    with ``schema``."""
+    m = manifest if manifest is not None else read_manifest(table_dir, version)
+    paths = bucket_paths(table_dir, m, buckets)
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def unapplied(
+    rows: DataFrame, manifest: dict | None, epoch_id: int
+) -> tuple[DataFrame, list[int]]:
+    """The redelivery skip: drop ``rows`` (which carry a ``bucket``
+    column) of buckets whose manifest epoch already reached
+    ``epoch_id`` — a previous attempt PUBLISHED them.  Returns the
+    remaining rows and their sorted bucket ids (one small collect,
+    ≤ N_BUCKETS ints; empty for a fully-applied replay or an empty
+    batch)."""
+    done = [b for b, e in bucket_epochs(manifest).items() if e >= int(epoch_id)]
+    todo = rows.filter(~F.col("bucket").isin(done)) if done else rows
+    affected = sorted(r["bucket"] for r in todo.select("bucket").distinct().collect())
+    return todo, affected
+
+
 def staging_dir(table_dir: str, epoch_id: int) -> str:
     """Write-once data directory for this epoch's rewritten buckets.
     If it already exists it is the residue of a CRASHED attempt (a
@@ -183,6 +263,34 @@ def commit(
     finally:
         os.close(dfd)
     return version
+
+
+def publish(
+    table_dir: str,
+    epoch_id: int,
+    rows: DataFrame,
+    touched=(),
+    extra: dict | None = None,
+    fail_before_commit: bool = False,
+) -> int:
+    """Stage and commit one epoch: write ``rows`` (which carry a
+    ``bucket`` column) write-once under ``data/commit=E/bucket=NN``,
+    then :func:`commit` the buckets actually written.  Buckets in
+    ``touched`` that wrote no rows were drained by the merge and leave
+    the map in the same flip.  ``fail_before_commit`` injects a crash
+    between the data write and the flip (tests).  Returns the
+    committed manifest version."""
+    staging = staging_dir(table_dir, epoch_id)
+    rows.write.partitionBy("bucket").parquet(staging)
+    if fail_before_commit:
+        raise RuntimeError("injected crash before manifest commit")
+    written = sorted(
+        int(name.split("=", 1)[1])
+        for name in (os.listdir(staging) if os.path.isdir(staging) else ())
+        if name.startswith("bucket=")
+    )
+    drained = sorted({int(b) for b in touched} - set(written))
+    return commit(table_dir, epoch_id, written, dropped_buckets=drained, extra=extra)
 
 
 def prune(table_dir: str, keep_last: int = 2) -> list[str]:

@@ -266,7 +266,6 @@ def test_s24_redelivery_rewrites_not_appends(spark):
     from chronicle_sniffer_spark.sources import warc as w
     from chronicle_sniffer_spark.streaming import manifest as mf
     from chronicle_sniffer_spark.streaming.crawl import (
-        _bucket_of,
         merge_containers,
         read_crawl_table,
     )
@@ -286,7 +285,7 @@ def test_s24_redelivery_rewrites_not_appends(spark):
     fb = [
         (r.path, r.bucket)
         for r in files.select(
-            "path", _bucket_of("path").alias("bucket")
+            "path", mf.bucket_of("path").alias("bucket")
         ).collect()
     ]
     from collections import Counter

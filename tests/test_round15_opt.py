@@ -5,9 +5,10 @@ py4j's per-call reflection lookups — the dominant residual
 plan-construction cost after round 14's dataFrameDebugging cut.  The
 cache must (a) actually be installed by the package import, (b)
 eliminate reflection round trips for repeated function resolution,
-(c) never cache static FIELD reads (a field's value can change), and
+(c) never cache static FIELD reads (a field's value can change),
 (d) leave query results byte-identical (the whole suite covers this
-broadly; the expression test below is the focused smoke check).
+broadly; the expression test below is the focused smoke check), and
+(e) re-resolve names on a view after a later ``java_import``.
 """
 
 from __future__ import annotations
@@ -53,6 +54,19 @@ def test_fastpath_steady_state_function_calls_issue_no_reflection(spark):
         F.upper(F.lower(F.col("x")))
     assert counts["total"] > 0  # the invocations themselves happened
     assert counts["r"] == 0
+
+
+def test_fastpath_java_import_invalidates_view_cache(spark):
+    """PySpark calls ``java_import`` lazily (foreachBatch,
+    addListener), after names may already be cached on the view: a
+    short name resolved BEFORE the import (a JavaPackage) must resolve
+    to the imported class AFTER it, as it does without the cache."""
+    from py4j.java_gateway import JavaClass, JavaPackage, java_import
+
+    v = spark.sparkContext._gateway.new_jvm_view()
+    assert isinstance(v.StreamingQueryListener, JavaPackage)
+    java_import(v, "org.apache.spark.sql.streaming.*")
+    assert isinstance(v.StreamingQueryListener, JavaClass)
 
 
 def test_fastpath_static_field_reads_are_not_cached(spark):

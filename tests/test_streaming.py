@@ -739,6 +739,58 @@ def test_t11_snapshot_isolation_and_prune(spark, tmp_path):
         _read_table(spark, table, version=v).count()
 
 
+def test_manifest_publish_crash_retry_and_drain(spark, tmp_path):
+    """manifest.publish is the one stage-and-commit path of all four
+    bucket stores, so it is their shared crash point: (a) a crash
+    before the flip leaves latest_version and read_snapshot on the
+    previous snapshot; (b) the retry at the same epoch removes the
+    crashed attempt's staged residue and publishes once; (c) a touched
+    bucket that wrote no rows leaves the bucket map in the same flip."""
+    from chronicle_sniffer_spark.streaming import manifest as mf
+
+    schema = "k bigint, v string"
+    table = str(tmp_path / "t")
+
+    def rows(data):
+        return spark.createDataFrame(data, schema).withColumn(
+            "bucket", mf.bucket_of("k")
+        )
+
+    def snap():
+        return _rows(mf.read_snapshot(spark, table, schema), "k", "v")
+
+    base = [(k, f"v{k}") for k in range(12)]
+    bucket = {r.k: r.bucket for r in rows(base).collect()}
+    drain, keep = sorted(set(bucket.values()))[:2]
+    assert mf.publish(table, 0, rows(base)) == 0
+    assert snap() == sorted(base)
+
+    # epoch 1 rewrites bucket `keep` and drains bucket `drain`
+    update = [(k, f"w{k}") for k in bucket if bucket[k] == keep]
+    want = sorted(
+        [t for t in base if bucket[t[0]] not in (keep, drain)] + update
+    )
+    # (a) the crashed attempt staged BOTH buckets, then died
+    residue = update + [(k, "stale") for k in bucket if bucket[k] == drain]
+    with pytest.raises(RuntimeError, match="injected crash"):
+        mf.publish(
+            table, 1, rows(residue), touched=[keep, drain], fail_before_commit=True
+        )
+    staged = os.path.join(table, "data", "commit=1")
+    assert f"bucket={drain}" in os.listdir(staged)
+    assert mf.latest_version(table) == 0
+    assert snap() == sorted(base)
+
+    # (b) + (c) the retry replaces the residue and publishes once
+    assert mf.publish(table, 1, rows(update), touched=[keep, drain]) == 1
+    assert mf.latest_version(table) == 1
+    assert f"bucket={drain}" not in os.listdir(staged)
+    epochs = mf.bucket_epochs(mf.read_manifest(table))
+    assert drain not in epochs and epochs[keep] == 1
+    assert set(epochs) == set(bucket.values()) - {drain}
+    assert snap() == want
+
+
 def test_manifest_prune_survives_noncontiguous_retained_range(tmp_path):
     """prune() after an earlier, more aggressive prune: the retained
     version range spans versions that no longer exist on disk, and the

@@ -71,6 +71,9 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("audit-codegen")
+    # plan strings truncate expression lists past this many fields; a
+    # wide Project (udm_projection's) would hide its lambda otherwise
+    spark.conf.set("spark.sql.debug.maxToStringFields", 1_000_000)
     findings: list[str] = []
     for name, spec in sorted(registry().items()):
         try:
